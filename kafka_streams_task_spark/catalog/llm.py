@@ -517,54 +517,6 @@ def text_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(bpe_cols, on="doc_id")
 
 
-def similarity_knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-5 (sampled-kmeans coarse quantizer, nearest-list
-    probing, exact rerank inside probed lists), gated per query against the
-    brute-force top-5 in the same plan: full k results, recall >= 0.8
-    (deterministic under the fixed kmeans seed; probes 12 of 16 lists —
-    the driver's near-uniform synthetic vectors need wide probing, see
-    similarity_knn_lsh_recall; a probed-vs-unprobed audit at sf0.01 showed
-    every missed neighbor sat in an UNPROBED list, i.e. recall here is
-    coarse-probe-bound, not quantization-bound).
-
-    r4 added the IVF-PQ path to the same gate (n_results_pq /
-    recall_pq_ok); r5 raised the per-query floor 0.6 -> 0.8 for both legs
-    after switching PQ to RESIDUAL coding (Jégou et al. §III-B — codes
-    carry x_norm - c_norm(list), the exact q·c term rides with the query)
-    and widening probing/rerank: ADC top-96 exactly reranked. Measured
-    per-query recall at the driver scale: min 0.8, mean 0.92 (both legs).
-
-    SCALE CONTRACT: this FOLDED single keeps the historical FIXED
-    parameters (16 lists / 12 probes / rerank 96), which the r13 sf0.1
-    sweep showed dropping below the 0.8 floor for 3/10 queries at 10x
-    the driver scale — coarse-probe-bound, as the sf0.01 audit
-    predicted. The DRIVER-GATED path (similarity_knn_suite) no longer
-    has that contract: r14 sizes its parameters from the corpus count
-    via ``operators.similarity.ivf_scale_params`` (the executable
-    sqrt(N) rule), and the same 0.8 gate holds at sf0.01 AND sf0.1.
-    The count-driven parameters are exactly as deterministic as fixed
-    ones (the count is exact, seeds fixed)."""
-    from ..operators.similarity import knn_ivf, knn_ivf_pq
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    exact = knn_bruteforce(emb, q, k=5)
-    # coarse_metric="l2" (review r16): this folded builder runs the
-    # near-uniform driver embeddings its 0.8 floors were proven on —
-    # the same explicit pin the host suite carries
-    approx = knn_ivf(emb, q, k=5, n_probe=12, coarse_metric="l2")
-    gate = _knn_recall_gate(q, exact, approx, k=5, floor=0.8)
-    approx_pq = knn_ivf_pq(
-        emb, q, k=5, n_probe=12, ks=64, rerank_k=96, coarse_metric="l2"
-    )
-    gate_pq = _knn_recall_gate(q, exact, approx_pq, k=5, floor=0.8).select(
-        "query_id",
-        F.col("n_results").alias("n_results_pq"),
-        F.col("recall_ok").alias("recall_pq_ok"),
-    )
-    return gate.join(gate_pq, on="query_id")
-
-
 def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """drop_exact_duplicates: full-schema surviving rows (lowest id per
     distinct text), the operator a training-data pipeline actually applies."""

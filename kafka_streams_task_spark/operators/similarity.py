@@ -209,18 +209,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def lsh_bucket(vec_col, planes: list[list[float]]) -> "F.Column":
-    """Sign-bit bucket id for a vector under fixed random hyperplanes —
-    pure column expressions (one dot product per plane)."""
-    v = _as_double(vec_col)
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(F.zip_with(v, p, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-        bucket = bucket.bitwiseOR(F.shiftleft(F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)).cast("long"), i))
-    return bucket
-
-
 def lsh_table_buckets(
     df: DataFrame,
     planes_mat: np.ndarray,

@@ -201,9 +201,9 @@ def streaming_dedup_near(
     at-rest corpus can always re-run the exact batch operator.
 
     Exactly-once under foreachBatch's at-least-once contract, via
-    APPEND-ONLY per-batch index shards (the versioned-state family of
-    ``decoupled.rollup_via_foreach_batch``, adapted so per-batch WRITE I/O is
-    shard-sized — a 100 TB index is never rewritten): the live index is
+    APPEND-ONLY per-batch index shards (the shard sibling of
+    ``state.versioned_fold``: per-batch WRITE I/O is shard-sized — a
+    100 TB index is never rewritten): the live index is
     the union of committed (``_SUCCESS``-marked) ``bands_v{N}`` shards,
     each holding only batch N's surviving bands. A batch writes its kept
     docs FIRST (``kept/batch_id={N}``, overwrite-idempotent), then its

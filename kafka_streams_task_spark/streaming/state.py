@@ -1,15 +1,30 @@
-"""Shared durable-state helpers for the foreachBatch operators.
+"""Durable-state protocol for the foreachBatch operators.
 
-The versioned-parquet commit protocol (``_SUCCESS``-marked directories,
-Hadoop FS API so any reachable scheme works) backs both the rollup state
-(``decoupled.rollup_via_foreach_batch``) and the near-dedup index shards
-(``dedup.streaming_dedup_near``) — one implementation, so commit-protocol
-fixes cannot drift between them.
+State lives in versioned parquet directories under one state dir: batch
+N writes ``{pfx}N``, and a version counts as committed only once
+parquet's ``_SUCCESS`` marker is in place. Every path goes through the
+Hadoop FS API, so any reachable scheme (file://, hdfs://, s3a://) works.
+
+Two lifecycles share these helpers:
+
+- :func:`versioned_fold` — self-contained cumulative state, one full
+  version per batch (the sketch, mixing, CDC and rollup operators). It
+  owns the whole per-batch protocol: checkpoint binding, redelivery
+  skip, fold, publish, and retention of the last two versions.
+- :func:`compact_index_shards` — append-only per-batch shards merged
+  into a compact root every K batches (the near-dedup and ANN indexes),
+  where a full rewrite per batch would be too expensive.
+
+Parameter metas (:func:`check_or_write_meta`) persist a state dir's
+build parameters beside its versions, and :func:`read_latest_state` is
+the guarded read side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
@@ -208,22 +223,14 @@ def compact_index_shards(
 def prune_state_versions(
     spark: SparkSession, root_dir: str, pfx: str, keep_last: int = 2
 ) -> list[int]:
-    """Delete old SELF-CONTAINED state versions, keeping the newest
-    ``keep_last`` — the retention side of the versioned-parquet
-    protocol. Every sketch/sample/mixing family writes one
-    self-contained version per micro-batch (each version is the full
-    cumulative state, not a delta), so an always-on stream accumulates
-    one parquet dir per batch forever; this bounds the dir at
-    O(keep_last) without touching correctness: readers resolve
+    """Delete old self-contained state versions, keeping the newest
+    ``keep_last`` — the retention side of :func:`versioned_fold`, which
+    calls it after every commit. Each version is the full cumulative
+    state, so dropping older ones loses nothing: readers resolve
     ``max(committed_versions)``, which is always kept, and redelivery
-    detection only needs the batch's OWN version to be present —
-    pruning batch N-5 cannot make a redelivered batch N-5 misfire
-    because foreachBatch redelivers only the LATEST uncommitted batch
-    under availableNow/checkpoint semantics; a redelivered batch whose
-    version was pruned would recompute from the kept predecessor, which
-    is the same deterministic merge. Keep at least 2 so a reader that
-    resolved the previous max just before a new commit never races a
-    delete.
+    detection compares against that same max. Keep at least 2 so a
+    reader that resolved the previous max just before a new commit
+    never races a delete.
 
     Only ``{pfx}N`` version directories are touched — parameter metas,
     ``_checkpoint`` markers, and compact/shard dirs (which have their
@@ -244,3 +251,143 @@ def prune_state_versions(
     for v in victims:
         fs.delete(Path(root_dir, f"{pfx}{v}"), True)
     return victims
+
+
+def versioned_fold(
+    stream: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    pfx: str,
+    step: Callable[[SparkSession, DataFrame, DataFrame | None], DataFrame],
+    publish: Callable[[DataFrame], None] | None = None,
+):
+    """Fold ``stream`` into self-contained versioned state, exactly once
+    under foreachBatch's at-least-once delivery; returns the started
+    ``availableNow`` query.
+
+    ``state_dir`` is bound to ``checkpoint_dir`` for life
+    (:func:`bind_state_to_checkpoint`). Per batch N:
+
+    - redelivery (N <= the newest committed version): the batch is
+      already folded in, so only ``publish`` runs, on the newest
+      version — this heals a crash between commit and publish;
+    - otherwise ``step(spark, batch_df, prev)`` folds the batch into the
+      newest committed version (``prev``; None before the first
+      commit), the result is written with ``mode("overwrite")`` to
+      ``{pfx}N`` (a crashed attempt has no ``_SUCCESS``, is invisible,
+      and is overwritten by the retry), ``publish`` gets the new
+      version, and versions older than the previous one are deleted.
+
+    ``step`` must be a deterministic function of ``prev`` and the batch;
+    it may raise to refuse a batch, leaving the committed state intact.
+    Keeping the previous version lets a reader that resolved it just
+    before this commit finish its scan, so a state dir holds at most
+    three versions while a batch is in flight and two between batches.
+    """
+    bind_state_to_checkpoint(stream.sparkSession, state_dir, checkpoint_dir)
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        versions = committed_versions(spark, state_dir, pfx)
+        prev = (
+            spark.read.parquet(f"{state_dir}/{pfx}{versions[-1]}")
+            if versions
+            else None
+        )
+        if versions and batch_id <= versions[-1]:
+            if publish is not None:
+                publish(prev)
+            return
+        path = f"{state_dir}/{pfx}{batch_id}"
+        step(spark, batch_df, prev).write.mode("overwrite").parquet(path)
+        if publish is not None:
+            publish(spark.read.parquet(path))
+        prune_state_versions(spark, state_dir, pfx, keep_last=2)
+
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def read_meta(spark: SparkSession, meta_path: str) -> dict:
+    """The single meta row as a plain dict. Use ``.get`` for columns
+    added after a meta's first release: metas written earlier lack them,
+    and absent must read as None (the old default), not raise, or every
+    pre-existing durable state dir dies on first contact after an
+    upgrade."""
+    return spark.read.parquet(meta_path).collect()[0].asDict()
+
+
+def check_or_write_meta(
+    spark: SparkSession,
+    state_dir: str,
+    meta_name: str,
+    label: str,
+    params: dict,
+) -> None:
+    """Persist a state dir's build parameters as ``{state_dir}/{meta_name}``
+    on first contact; afterwards REFUSE any caller whose parameters
+    disagree with the durable ones — folding under different parameters
+    (a CMS width, a DDSketch gamma, a bucket count) into durable state
+    produces silent garbage.
+
+    ``params`` maps ``"column type"`` DDL fragments to values, e.g.
+    ``{"k int": 512}``; the fragments together are the meta's schema.
+    The probe is ``_SUCCESS``-gated (:func:`meta_committed`): a meta dir
+    left half-written by a crash is rewritten, not read, so the state
+    heals instead of failing every later read. Columns missing from an
+    older meta read as None (:func:`read_meta`).
+
+    Single-writer contract: the dir is owned by ONE streaming query
+    (:func:`bind_state_to_checkpoint`). Two writers racing the first
+    write with different parameters is outside it — the loser's
+    parameters are overwritten, then refused on its next batch."""
+    meta_path = f"{state_dir}/{meta_name}"
+    want = {col.split()[0]: v for col, v in params.items()}
+    if meta_committed(spark, meta_path):
+        row = read_meta(spark, meta_path)
+        got = {c: row.get(c) for c in want}
+        if got != want:
+            built = "/".join(f"{c}={v!r}" for c, v in got.items())
+            asked = "/".join(repr(v) for v in want.values())
+            raise ValueError(
+                f"{label} state at {state_dir} was built with {built}; "
+                f"got {asked}"
+            )
+    else:
+        spark.createDataFrame(
+            [tuple(want.values())], ", ".join(params)
+        ).coalesce(1).write.mode("overwrite").parquet(meta_path)
+
+
+def read_latest_state(
+    spark: SparkSession,
+    state_dir: str,
+    pfx: str,
+    what: str,
+    meta_name: str | None = None,
+) -> tuple[DataFrame, dict | None]:
+    """``(newest committed version, meta row)`` of a versioned state
+    dir. Raises when nothing has committed (``what`` names the state in
+    the message), and — when the family keeps a ``meta_name`` — when
+    committed versions exist WITHOUT their meta: the durable state's
+    build parameters are then unknown (partial state-dir cleanup?), and
+    caller-supplied ones cannot be trusted against it."""
+    versions = committed_versions(spark, state_dir, pfx)
+    meta_path = f"{state_dir}/{meta_name}"
+    has_meta = meta_name is not None and meta_committed(spark, meta_path)
+    if not versions:
+        missing = f" and no {meta_name}" if meta_name and not has_meta else ""
+        raise ValueError(f"no committed {what} under {state_dir}{missing}")
+    if meta_name is not None and not has_meta:
+        raise ValueError(
+            f"no {meta_name} under {state_dir} but committed {what} exist — "
+            "the durable state's build parameters are unknown (partial "
+            "state-dir cleanup?), so caller-supplied ones cannot be "
+            "trusted against it"
+        )
+    state = spark.read.parquet(f"{state_dir}/{pfx}{versions[-1]}")
+    return state, read_meta(spark, meta_path) if has_meta else None

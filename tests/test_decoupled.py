@@ -184,13 +184,25 @@ def test_foreach_batch_rollup(spark, tmpdir):
     got = [(w.tmp_f, w.tmp_c, w.date) for w in rollup[GH]]
     assert got == [(71.0, 31.0, "2020-01-01"), (72.0, 32.0, "2020-01-02")]
 
-    # idempotency under redelivery: replay the SAME batches against the
-    # existing state (fresh checkpoint = foreachBatch redelivers batch ids
-    # 0..1). The versioned-state guard must skip the already-applied merges
-    # — without it, every (sum, count) delta would be counted twice.
+    # the state dir is bound to its checkpoint: under a fresh checkpoint
+    # batch ids restart at 0 and real batches would be mistaken for
+    # redeliveries, so reuse is refused up front
     stream2 = read_json_stream(spark, src, WEATHER_RAW, max_files_per_trigger=1)
-    q2 = rollup_via_foreach_batch(stream2, f"{tmpdir}/state", f"{tmpdir}/ckpt2")
-    q2.awaitTermination(180)
-    rollup2 = {r.geohash: r.weatherList for r in spark.read.parquet(f"{tmpdir}/state/rollup").collect()}
-    got2 = [(w.tmp_f, w.tmp_c, w.date) for w in rollup2[GH]]
-    assert got2 == got  # unchanged: redelivered deltas not re-merged
+    with pytest.raises(ValueError, match="bound to checkpoint"):
+        rollup_via_foreach_batch(stream2, f"{tmpdir}/state", f"{tmpdir}/ckpt2")
+
+    # genuine redelivery on the SAME checkpoint: dropping batch 1's commit
+    # marker makes the restart replay it. Its deltas are already in the
+    # state, so the merge is skipped and the rollup (deleted here to
+    # simulate a crash before the publish) is republished unchanged.
+    os.remove(f"{tmpdir}/ckpt/commits/1")
+    crc = f"{tmpdir}/ckpt/commits/.1.crc"
+    if os.path.exists(crc):
+        os.remove(crc)
+    shutil.rmtree(f"{tmpdir}/state/rollup")
+    stream3 = read_json_stream(spark, src, WEATHER_RAW, max_files_per_trigger=1)
+    q3 = rollup_via_foreach_batch(stream3, f"{tmpdir}/state", f"{tmpdir}/ckpt")
+    q3.awaitTermination(180)
+    rollup3 = {r.geohash: r.weatherList for r in spark.read.parquet(f"{tmpdir}/state/rollup").collect()}
+    got3 = [(w.tmp_f, w.tmp_c, w.date) for w in rollup3[GH]]
+    assert got3 == got  # unchanged: redelivered deltas not re-merged

@@ -1039,3 +1039,66 @@ def test_streaming_dedup_embedding_cross_batch(spark, tmpdir):
     )
     q2.awaitTermination(180)
     assert {r["vec_id"] for r in spark.read.parquet(f"{index_dir}/kept").collect()} == kept_ids
+
+
+def test_versioned_fold_bounds_versions_and_heals_uncommitted(spark, tmpdir):
+    """The shared foreachBatch state primitive, driven with a trivial
+    summing step over one-row micro-batches: the fold is exact, only the
+    newest two versions stay on disk (so ``step`` never sees more than
+    two), and a half-written next version left by a crash is overwritten
+    and committed when the stream resumes on the same checkpoint."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from kafka_streams_task_spark.streaming.state import (
+        committed_versions,
+        versioned_fold,
+    )
+
+    src, state, ckpt = f"{tmpdir}/fold_in", f"{tmpdir}/fold_state", f"{tmpdir}/fold_ckpt"
+    os.makedirs(src)
+
+    def add_file(i: int) -> None:
+        path = f"{src}/b{i:02d}.json"
+        with open(path, "w") as f:
+            f.write(json.dumps({"v": i + 1}))
+        os.utime(path, (1000000000 + 100 * i,) * 2)
+
+    seen = []
+
+    def step(spark, batch_df, prev):
+        seen.append(len(committed_versions(spark, state, "sum_v")))
+        total = batch_df.agg(F.sum("v").alias("total"))
+        if prev is None:
+            return total
+        return prev.unionByName(total).agg(F.sum("total").alias("total"))
+
+    def run() -> None:
+        stream = (
+            spark.readStream.schema("v long").option("maxFilesPerTrigger", 1).json(src)
+        )
+        versioned_fold(stream, state, ckpt, "sum_v", step).awaitTermination(120)
+
+    def total() -> int:
+        v = committed_versions(spark, state, "sum_v")[-1]
+        return spark.read.parquet(f"{state}/sum_v{v}").collect()[0]["total"]
+
+    def version_dirs() -> list[str]:
+        return sorted(d for d in os.listdir(state) if d.startswith("sum_v"))
+
+    for i in range(12):
+        add_file(i)
+    run()
+    assert total() == sum(range(1, 13))
+    assert len(seen) == 12 and max(seen) <= 2, seen
+    assert version_dirs() == ["sum_v10", "sum_v11"]
+
+    os.makedirs(f"{state}/sum_v12")
+    with open(f"{state}/sum_v12/part-half-written.parquet", "w") as f:
+        f.write("not parquet")  # crash artifact: dir exists, no _SUCCESS
+    add_file(12)
+    run()
+    assert total() == sum(range(1, 14))
+    assert os.path.exists(f"{state}/sum_v12/_SUCCESS")
+    assert version_dirs() == ["sum_v11", "sum_v12"]
