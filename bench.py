@@ -108,7 +108,8 @@ BASELINE_SEC = {
     "semantic_dedup": 2.9,
     # r17 receipt (VERDICT r16 item 2): the r16 driver reading of 1.65
     # was a window artifact, not a regression of the r16 window-df
-    # rewrite — fresh same-tree A/B (tools/exp_tfidf_ab.py, min-of-5
+    # rewrite — fresh same-tree A/B (tools/exp_tfidf_ab.py, deleted
+    # since: `git show f21f060:tools/exp_tfidf_ab.py`; min-of-5
     # alternating): window form 0.871 vs the r15 groupBy+join-back form
     # 0.874, with the window form scanning the corpus once less
     # (Scans 2 vs 3); r17 round-start bench reads 0.991. Freeze kept.
@@ -1643,17 +1644,9 @@ def _cdc_merge(s, d):
     return apply_changes(ev, delta, ["event_id"])
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-
-    from kafka_streams_task_spark.catalog import CATALOG
-    from kafka_streams_task_spark.plans import get_spark
-
-    spark = get_spark(app_name="bench")
-
-    # warm the JVM once: codegen compiler, parquet reader, shuffle, Python
-    # worker pool (each query is then measured on a warm engine)
+def warm_up(spark) -> None:
+    """Warm the JVM once: codegen compiler, parquet reader, shuffle, Python
+    worker pool (each query is then measured on a warm engine)."""
     spark.range(1000).count()
     warm = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     warm.groupBy("l_returnflag").count().collect()
@@ -1666,31 +1659,71 @@ def main() -> None:
         lambda it: it, "id long"
     ).count()
 
-    # r9 (VERDICT r8 item 2): host-speed calibration — a FIXED CPU-bound
-    # probe (the frozen geohash codegen expression over a generated
-    # frame: pure JVM whole-stage codegen, zero IO, zero Python, one
-    # trivial final aggregate). Three rounds litigated uniform no-code-
-    # change drifts (r6 up, r7 down, r8 up: same-host interference);
-    # calib_sec makes that drift measurable: comparing rounds, divide
-    # each round's totals by (calib_sec / frozen baseline calib_sec)
-    # before reading anything as a regression. min-of-2 like every
-    # other entry; the probe never counts toward any total.
+
+# r9 (VERDICT r8 item 2): host-speed calibration — a FIXED CPU-bound
+# probe (the frozen geohash codegen expression over a generated
+# frame: pure JVM whole-stage codegen, zero IO, zero Python, one
+# trivial final aggregate). Three rounds litigated uniform no-code-
+# change drifts (r6 up, r7 down, r8 up: same-host interference);
+# calib_sec makes that drift measurable: comparing rounds, divide
+# each round's totals by (calib_sec / frozen baseline calib_sec)
+# before reading anything as a regression. min-of-2 like every
+# other entry; the probe never counts toward any total.
+def _calib_once(spark) -> float:
     from pyspark.sql import functions as F_sql
 
     from kafka_streams_task_spark.functions.geohash import geohash_expr
 
-    def _calib_once() -> float:
-        t0 = time.time()
-        frame = spark.range(0, 4_000_000, 1, n_part).select(
-            ((F_sql.col("id") % 1_800_000) / 10_000.0 - 90.0).alias("lat"),
-            ((F_sql.col("id") % 3_600_000) / 10_000.0 - 180.0).alias("lng"),
-        )
-        frame.select(geohash_expr("lat", "lng", 6).alias("g")).agg(
-            F_sql.max("g"), F_sql.min("g"), F_sql.count(F_sql.lit(1))
-        ).collect()
-        return round(time.time() - t0, 3)
+    n_part = spark.sparkContext.defaultParallelism
+    t0 = time.time()
+    frame = spark.range(0, 4_000_000, 1, n_part).select(
+        ((F_sql.col("id") % 1_800_000) / 10_000.0 - 90.0).alias("lat"),
+        ((F_sql.col("id") % 3_600_000) / 10_000.0 - 180.0).alias("lng"),
+    )
+    frame.select(geohash_expr("lat", "lng", 6).alias("g")).agg(
+        F_sql.max("g"), F_sql.min("g"), F_sql.count(F_sql.lit(1))
+    ).collect()
+    return round(time.time() - t0, 3)
 
-    calib_sec = min(_calib_once(), _calib_once())
+
+def resolve_entry(name: str, ops: dict, raw: dict, catalog: dict):
+    """The function behind bench entry ``name``: the ops section first,
+    then the raw headline ops, then the catalog; None if none has it."""
+    if name in ops:
+        return ops[name]
+    if name in raw:
+        return raw[name]
+    return catalog[name].fn if name in catalog else None
+
+
+def timed_run(spark, fn, sf_dir: str) -> tuple[float, int]:
+    """One timed execution of ``fn(spark, sf_dir)`` to completion:
+    (wall seconds, row count)."""
+    # clear persisted operator indexes before EACH timed run: every
+    # measurement is a full isolated execution, and cached blocks from
+    # 25 queries don't pile up in the unified memory manager and
+    # squeeze execution memory for later queries (observed: mid-run
+    # 10x slowdowns, "Asked to cache already cached data" warnings)
+    spark.catalog.clearCache()
+    t0 = time.time()
+    rows = fn(spark, sf_dir).count()
+    return round(time.time() - t0, 3), rows
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+
+    from pyspark.sql import functions as F_sql
+
+    from kafka_streams_task_spark.catalog import CATALOG
+    from kafka_streams_task_spark.plans import get_spark
+
+    spark = get_spark(app_name="bench")
+    warm_up(spark)
+    n_part = spark.sparkContext.defaultParallelism
+
+    calib_sec = min(_calib_once(spark), _calib_once(spark))
     print(f"# calib_sec: {calib_sec}", file=sys.stderr)
 
     # r12 (VERDICT r11 item 3): a SECOND frozen probe exercising what the
@@ -1810,26 +1843,12 @@ def main() -> None:
             # example). A third position sample turns the probe series
             # into a coarse timeline: flags in a section whose nearest
             # probes are inflated normalize by THOSE probes.
-            calib_mid["calib_sec_mid"] = min(_calib_once(), _calib_once())
+            calib_mid["calib_sec_mid"] = min(_calib_once(spark), _calib_once(spark))
             calib_mid["calib_py_sec_mid"] = min(
                 _calib_py_once(), _calib_py_once()
             )
             print(f"# calib_mid: {calib_mid}", file=sys.stderr)
-        if name in ops:
-            fn = ops[name]
-        else:
-            fn = raw[name] if name in raw else CATALOG[name].fn
-
-        def timed_run() -> tuple[float, int]:
-            # clear persisted operator indexes before EACH timed run: every
-            # measurement is a full isolated execution, and cached blocks from
-            # 25 queries don't pile up in the unified memory manager and
-            # squeeze execution memory for later queries (observed: mid-run
-            # 10x slowdowns, "Asked to cache already cached data" warnings)
-            spark.catalog.clearCache()
-            t0 = time.time()
-            rows = fn(spark, sf_dir).count()
-            return round(time.time() - t0, 3), rows
+        fn = resolve_entry(name, ops, raw, CATALOG)
 
         # run 1 pays one-time JVM codegen/JIT of this query's generated
         # classes (a long-lived cluster amortizes that to zero); run 2 is
@@ -1840,9 +1859,9 @@ def main() -> None:
         # up to MAX_EXTRA_TRIALS more samples. min over all trials is
         # reported; a real regression survives the retries.
         runs = []
-        t, n = timed_run()
+        t, n = timed_run(spark, fn, sf_dir)
         runs.append(t)
-        t, n = timed_run()
+        t, n = timed_run(spark, fn, sf_dir)
         runs.append(t)
         base = BASELINE_SEC.get(name, OPS_BASELINE_SEC.get(name, float("inf")))
         gate = RETRY_FACTOR * base
@@ -1852,7 +1871,7 @@ def main() -> None:
                 f"2x baseline ({base}s) — retrying",
                 file=sys.stderr,
             )
-            t, n = timed_run()
+            t, n = timed_run(spark, fn, sf_dir)
             runs.append(t)
         all_runs[name] = runs
         n_trials[name] = len(runs)
@@ -1868,7 +1887,7 @@ def main() -> None:
     # session-aging drift measurable and separable from host drift —
     # the r14 closing run's uniform ops drift was invisible to all three
     # START-of-run probes, which is exactly the gap these close.
-    calib_sec_end = min(_calib_once(), _calib_once())
+    calib_sec_end = min(_calib_once(spark), _calib_once(spark))
     calib_py_sec_end = min(_calib_py_once(), _calib_py_once())
     calib_scan_sec_end = min(_calib_scan_once(), _calib_scan_once())
     print(

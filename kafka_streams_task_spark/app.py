@@ -90,11 +90,15 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--output-path")
     ap.add_argument("--join", choices=["inner", "left"], default="inner")
     args = ap.parse_args(argv)
+    if args.mode == "batch" and not (args.weather_path and args.hotels_path):
+        ap.error("batch mode needs --weather-path and --hotels-path")
+    if args.mode == "stream" and args.join != "inner":
+        # the stream-static topology only expresses the inner join (see
+        # streaming.topology.weather_hotels_stream)
+        ap.error("stream mode supports only --join inner")
 
     spark = get_spark(app_name="weather_hotels_app")
     if args.mode == "batch":
-        if not (args.weather_path and args.hotels_path):
-            ap.error("batch mode needs --weather-path and --hotels-path")
         run_batch(spark, args.weather_path, args.hotels_path, args.output_path, args.join)
     else:
         q = run_streaming_kafka(

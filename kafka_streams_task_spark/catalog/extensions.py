@@ -5047,8 +5047,6 @@ _CMS_DEPTH, _CMS_WIDTH = 4, 4096
 _CMS_P_DEPTH, _CMS_P_WIDTH = 2, 4
 _CMS_P_DOCS = [(1, "a a b"), (2, "b c d e f g h")]
 
-_CMS_COLS = [("k", "string"), ("i1", "long"), ("i2", "long"), ("i3", "long")]
-
 _CMS_CANARY = [
     ("canary", "plain", 1, -1, 9007199254740993),
     ("canary", "", None, 9223372036854775807, None),

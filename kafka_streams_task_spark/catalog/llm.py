@@ -401,26 +401,6 @@ def _knn_recall_gate(
     )
 
 
-def similarity_knn_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-5 via random-hyperplane LSH, gated per query against
-    the exact brute-force top-5 computed in the same plan: every query must
-    return a full k results with recall >= 0.4. This makes the approximate
-    operator's OUTPUT driver-verified, not just pytest-verified.
-
-    Params/floor are tuned to the driver's synthetic embeddings, which are
-    near-uniform (neighbor cosine margins are thin, the hard case for LSH):
-    4 planes x 8 tables examines ~50% of the corpus and still bottoms out
-    at 0.4 per-query recall (measured 0.4-1.0 at sf0.001/0.01/0.1, fully
-    deterministic under the fixed hyperplane seed). A clustered real-world
-    embedding corpus supports tighter buckets; the floor here checks the
-    pipeline, the pytest planted-structure test checks discrimination."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    exact = knn_bruteforce(emb, q, k=5)
-    approx = knn_lsh(emb, q, k=5, n_planes=4, n_tables=8)
-    return _knn_recall_gate(q, exact, approx, k=5, floor=0.4)
-
-
 # ---------------------------------------------------------------------------
 # Multimodal plumbing
 # ---------------------------------------------------------------------------

@@ -24,14 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-ASSET_META = T.StructType(
-    [
-        T.StructField("mime", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("checksum", T.StringType()),
-    ]
-)
-
 IMAGE_FEATURES = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -115,7 +115,7 @@ def weather_daily_avg(keyed: DataFrame) -> DataFrame:
     )
 
 
-def weather_by_geohash(daily: DataFrame, sort_list: bool = True) -> DataFrame:
+def weather_by_geohash(daily: DataFrame) -> DataFrame:
     """A4-A5: roll daily averages up into a per-geohash list.
 
     Reference regroups the KTable by the geohash prefix of the packed key and
@@ -125,13 +125,11 @@ def weather_by_geohash(daily: DataFrame, sort_list: bool = True) -> DataFrame:
     nondeterministic under repartitioning; sorting is the engine's
     well-defined replacement).
     """
-    lst = F.collect_list(F.struct(F.col("tmp_f"), F.col("tmp_c"), F.col("wthr_date").alias("date")))
-    if sort_list:
-        # sort by date: build (date-first) structs, sort, then reshape
-        lst = F.array_sort(
-            F.collect_list(F.struct(F.col("wthr_date").alias("date"), F.col("tmp_f"), F.col("tmp_c")))
-        )
-        lst = F.transform(lst, lambda s: F.struct(s["tmp_f"].alias("tmp_f"), s["tmp_c"].alias("tmp_c"), s["date"].alias("date")))
+    # sort by date: build (date-first) structs, sort, then reshape
+    lst = F.array_sort(
+        F.collect_list(F.struct(F.col("wthr_date").alias("date"), F.col("tmp_f"), F.col("tmp_c")))
+    )
+    lst = F.transform(lst, lambda s: F.struct(s["tmp_f"].alias("tmp_f"), s["tmp_c"].alias("tmp_c"), s["date"].alias("date")))
     return daily.groupBy("geohash").agg(lst.alias("weatherList"))
 
 

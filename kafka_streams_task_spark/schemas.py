@@ -44,15 +44,6 @@ WEATHER = T.StructType(
     ]
 )
 
-#: Per-geohash rollup value (reference: domain/WeatherAgg.java:10-11) —
-#: in Spark the list is ``collect_list(struct(...))``.
-WEATHER_AGG = T.StructType(
-    [
-        T.StructField("weatherList", T.ArrayType(WEATHER)),
-        T.StructField("date", T.StringType()),
-    ]
-)
-
 #: Raw hotel/address record, as JSON on the input topic
 #: (reference: WeatherHotelsApp.java:116-126; FIXTURES.md §2).
 HOTELS_RAW = T.StructType(
@@ -65,20 +56,6 @@ HOTELS_RAW = T.StructType(
         T.StructField("Latitude", T.StringType()),
         T.StructField("Longitude", T.StringType()),
         T.StructField("Hash", T.StringType()),
-    ]
-)
-
-#: Enriched address output (reference: domain/Address.java:10-16 with
-#: avgWeathers appended by Address.addWeather, :31-41).
-ADDRESS_ENRICHED = T.StructType(
-    [
-        T.StructField("hash", T.StringType()),
-        T.StructField("country", T.StringType()),
-        T.StructField("city", T.StringType()),
-        T.StructField("address", T.StringType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("id", T.StringType()),
-        T.StructField("avgWeathers", T.ArrayType(WEATHER)),
     ]
 )
 

@@ -17,8 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_ORDERABLE = (T.LongType, T.IntegerType, T.DoubleType, T.FloatType, T.TimestampType)
-
 
 def latest_per_key_stream(
     df: DataFrame, key: str, order_col: str

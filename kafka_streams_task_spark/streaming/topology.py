@@ -12,7 +12,7 @@ updated KTable at micro-batch granularity.
 
 State size note for scale: state is bounded by (distinct geohash cells x
 distinct dates) — the same bound as the reference's RocksDB stores
-(WeatherHotelsApp.java:99,109). An optional TTL knob (``state_ttl``) expires
+(WeatherHotelsApp.java:99,109). An optional TTL knob (``state_ttl_ms``) expires
 idle cells; the reference's semantics (keep forever) is the default.
 """
 

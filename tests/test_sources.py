@@ -95,6 +95,27 @@ def test_app_batch_mode(spark, tmpdir):
     assert [(w.tmp_f, w.date) for w in rows[0].avgWeathers] == [(71.0, "2020-01-01")]
 
 
+@pytest.mark.parametrize(
+    "argv",
+    [
+        ["--mode", "batch", "--weather-path", "/w"],
+        ["--mode", "stream", "--join", "left"],
+    ],
+)
+def test_app_usage_errors_exit_before_session(monkeypatch, argv):
+    """Usage errors exit before a JVM starts: batch mode without both input
+    paths, and stream mode with a left join, which the stream-static
+    topology cannot express (it used to run the inner join silently)."""
+    from kafka_streams_task_spark import app
+
+    def no_session(**_kw):
+        raise AssertionError("get_spark called on a usage error")
+
+    monkeypatch.setattr(app, "get_spark", no_session)
+    with pytest.raises(SystemExit):
+        app.main(argv)
+
+
 def test_orc_roundtrip(spark, sf_dir, tmpdir):
     """ORC is the second columnar format Spark ships natively; same
     round-trip contract as parquet/JSON/CSV."""

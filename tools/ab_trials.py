@@ -1,12 +1,16 @@
 #!/usr/bin/env python
 """Same-host A/B trial runner for the bench receipt protocol
-(BENCH_BASELINE_r1.md): run N trials of named ops-bench workloads from a
-given repo root (the current tree or a freeze-point worktree), using the
-same session config and warm-up as bench.py, and print one JSON line with
-the raw trials plus the calibration probes measured in the same session.
+(BENCH_BASELINE_r1.md): run N trials of named bench entries from a
+given repo root (the current tree or a freeze-point worktree) and print
+one JSON line with the raw trials plus the CPU calibration probe measured
+in the same session.
+
+The harness (session warm-up, calibration probe, entry lookup, timed run)
+is always this tree's bench.py, so both sides of an A/B are timed the same
+way; the workloads and the engine package come from --root.
 
 Usage:
-  python tools/ab_trials.py --root /root/repo --trials 6 warc_parse cms_freq
+  python tools/ab_trials.py --root . --trials 6 warc_parse cms_freq
   python tools/ab_trials.py --root /tmp/wt_r9 --trials 6 snapshot_diff
 
 Run each root in a separate process (both roots define a `bench` module).
@@ -14,10 +18,22 @@ Run each root in a separate process (both roots define a `bench` module).
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import sys
-import time
+
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _load_harness():
+    """This tree's bench.py, under a name that leaves `bench` to --root."""
+    spec = importlib.util.spec_from_file_location(
+        "bench_harness", os.path.join(HERE, "bench.py")
+    )
+    harness = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(harness)
+    return harness
 
 
 def main() -> int:
@@ -45,63 +61,41 @@ def main() -> int:
         print(__doc__, file=sys.stderr)
         return 2
 
-    sys.path.insert(0, root)
+    # importing bench.py puts its own directory first on sys.path, so the
+    # harness is loaded before --root goes in front of it
+    harness = _load_harness()
+    sys.path.insert(0, os.path.abspath(root))
     import bench  # the root's own bench module (freeze-point or current)
 
+    import kafka_streams_task_spark as engine
+
+    engine_root = os.path.dirname(os.path.dirname(os.path.abspath(engine.__file__)))
+    if os.path.realpath(engine_root) != os.path.realpath(root):
+        print(f"engine loaded from {engine_root}, not --root {root}", file=sys.stderr)
+        return 2
+    print(f"# engine: {engine_root}; workloads: {bench.__file__}", file=sys.stderr)
+
+    from kafka_streams_task_spark.catalog import CATALOG
     from kafka_streams_task_spark.plans import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.path.abspath(sf_dir)
+    # Python workers import the engine from the session's working
+    # directory, not from this process's sys.path
+    os.chdir(root)
     spark = get_spark(app_name="ab_trials")
-
-    # bench.py's warm-up, verbatim: JVM codegen, parquet reader, shuffle,
-    # and the per-core Python worker pool
-    spark.range(1000).count()
-    warm = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    warm.groupBy("l_returnflag").count().collect()
-    warm.selectExpr("l_orderkey").distinct().count()
-    n_part = spark.sparkContext.defaultParallelism
-    spark.range(0, n_part * 10, 1, n_part).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-
-    # host-state probes (same workloads as bench.py's calib_sec/_io)
-    from pyspark.sql import functions as F
-
-    from kafka_streams_task_spark.functions.geohash import geohash_expr
-
-    def calib_once() -> float:
-        t0 = time.time()
-        frame = spark.range(0, 4_000_000, 1, n_part).select(
-            ((F.col("id") % 1_800_000) / 10_000.0 - 90.0).alias("lat"),
-            ((F.col("id") % 3_600_000) / 10_000.0 - 180.0).alias("lng"),
-        )
-        frame.select(geohash_expr("lat", "lng", 6).alias("g")).agg(
-            F.max("g"), F.min("g"), F.count(F.lit(1))
-        ).collect()
-        return round(time.time() - t0, 3)
-
-    calib = min(calib_once(), calib_once())
+    harness.warm_up(spark)
+    calib = min(harness._calib_once(spark), harness._calib_once(spark))
 
     workloads = bench._ops_workloads()
     raw = bench._raw_ops() if hasattr(bench, "_raw_ops") else {}
-    # r17: fall back to catalog queries (bench.py's own resolution order),
-    # so headline entries that are plain catalog functions can be trialed
-    from kafka_streams_task_spark.catalog import CATALOG
-
     out: dict[str, list[float]] = {}
     for name in ops:
-        fn = workloads.get(name) or raw.get(name)
-        if fn is None and name in CATALOG:
-            fn = CATALOG[name].fn
+        fn = harness.resolve_entry(name, workloads, raw, CATALOG)
         if fn is None:
             print(f"# {name}: not in this root's bench", file=sys.stderr)
             continue
-        runs = []
-        for _ in range(trials):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            runs.append(round(time.time() - t0, 3))
+        runs = [harness.timed_run(spark, fn, sf_dir)[0] for _ in range(trials)]
         out[name] = runs
         print(f"# {name}: {runs} (min {min(runs)})", file=sys.stderr)
 

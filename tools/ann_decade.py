@@ -103,6 +103,7 @@ def main() -> int:
         knn_bruteforce,
         knn_ivf_pq,
     )
+    from bench import warm_up
     from kafka_streams_task_spark.plans import get_spark
 
     scratch = os.path.join(
@@ -117,11 +118,7 @@ def main() -> int:
         generate(clu50, 50_000, seed=43)
 
     spark = get_spark(app_name="ann_decade")
-    spark.range(1000).count()
-    n_part = spark.sparkContext.defaultParallelism
-    spark.range(0, n_part * 10, 1, n_part).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    warm_up(spark)
 
     # each fixture measured under the trainer its documented path runs
     # (r16): the clustered fixtures take the library DEFAULT spherical

@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Round-end preflight: everything the grading driver will exercise, locally.
-#   tests -> vanilla oracle sweep (sf0.01) -> bench (sf0.1)
+#   tests -> perfbench self-tests -> vanilla oracle sweep (sf0.01) -> bench (sf0.1)
 # Usage: bash tools/preflight.sh [--skip-bench]
 set -u
 cd "$(dirname "$0")/.."
@@ -9,6 +9,9 @@ fail=0
 
 echo "== pytest =="
 python -m pytest tests/ -q || fail=1
+
+echo "== benchmark self-tests (perfbench, no Spark) =="
+python -m pytest perfbench -q -p no:cacheprovider || fail=1
 
 echo "== oracle sweep (vanilla session, sf0.01 — mirrors the driver) =="
 python tools/check_oracle.py --vanilla | tail -3 || fail=1

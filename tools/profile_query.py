@@ -2,9 +2,10 @@
 """Stage-level profiler for bench workloads (guide §1: measure first).
 
 Runs named bench entries (headline raw ops, ops-section workloads, or
-catalog queries) on the bench session config with the Spark event log
-enabled, then attributes each query's wall time to its jobs/stages:
-per-stage wall, task-time sum, max task, Python/shuffle signals.
+catalog queries) through bench.py's own warm-up, entry lookup and timed
+run, with the Spark event log enabled, then attributes each query's wall
+time to its jobs/stages: per-stage wall, task-time sum, max task,
+Python/shuffle signals.
 
 Usage: python tools/profile_query.py [--sf DIR] [--runs 2] name ...
 """
@@ -56,30 +57,23 @@ def main() -> int:
             "spark.eventLog.compress": "false",
         },
     )
-    # bench-identical warm-up
-    spark.range(1000).count()
-    warm = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    warm.groupBy("l_returnflag").count().collect()
-    n_part = spark.sparkContext.defaultParallelism
-    spark.range(0, n_part * 10, 1, n_part).mapInPandas(lambda it: it, "id long").count()
+    bench.warm_up(spark)
 
     raw = bench._raw_ops()
     ops = bench._ops_workloads()
 
     spans: dict[str, list[tuple[float, float]]] = defaultdict(list)
     for name in names:
-        fn = ops.get(name) or raw.get(name) or (CATALOG[name].fn if name in CATALOG else None)
+        fn = bench.resolve_entry(name, ops, raw, CATALOG)
         if fn is None:
             print(f"unknown workload: {name}", file=sys.stderr)
             continue
         for r in range(runs):
-            spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"{name}#run{r}")
-            t0 = time.time()
-            cnt = fn(spark, sf_dir).count()
+            sec, cnt = bench.timed_run(spark, fn, sf_dir)
             t1 = time.time()
-            spans[f"{name}#run{r}"].append((t0, t1))
-            print(f"# {name} run{r}: {t1 - t0:.3f}s ({cnt} rows)", flush=True)
+            spans[f"{name}#run{r}"].append((t1 - sec, t1))
+            print(f"# {name} run{r}: {sec:.3f}s ({cnt} rows)", flush=True)
         spark.sparkContext.setJobDescription(None)
     spark.stop()
 

@@ -20,7 +20,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -140,10 +139,9 @@ def run_spatial(spark, fixtures: dict) -> dict:
     unordered-pair side so candidates and pairs are the same universe;
     the overhead ratio candidates/pairs staying ~constant across the
     decade is the blocking-efficiency reading."""
-    import time as _t
-
     from pyspark.sql import functions as F
 
+    from bench import timed_run
     from kafka_streams_task_spark.operators.spatial import radius_self_join
 
     out: dict[str, dict] = {}
@@ -184,12 +182,14 @@ def run_spatial(spark, fixtures: dict) -> dict:
         )
         runs, pairs = [], 0
         for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = _t.time()
-            pairs = radius_self_join(
-                pts, 25.0, cell_deg=cell, max_abs_lat=60.0, validate=False
-            ).count()
-            runs.append(round(_t.time() - t0, 3))
+            sec, pairs = timed_run(
+                spark,
+                lambda s, d: radius_self_join(
+                    pts, 25.0, cell_deg=cell, max_abs_lat=60.0, validate=False
+                ),
+                path,
+            )
+            runs.append(sec)
         out[name] = {
             "sec": min(runs),
             "runs": runs,
@@ -208,6 +208,7 @@ def main() -> int:
         minhash_lsh_candidates,
         ngram_jaccard_pairs,
     )
+    from bench import timed_run, warm_up
     from kafka_streams_task_spark.plans import get_spark
 
     scratch = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
@@ -220,11 +221,7 @@ def main() -> int:
         generate(syn10, 50_000, seed=43)
 
     spark = get_spark(app_name="scale_decade")
-    spark.range(1000).count()
-    n_part = spark.sparkContext.defaultParallelism
-    spark.range(0, n_part * 10, 1, n_part).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    warm_up(spark)
 
     if "spatial" in sys.argv[1:]:
         # spatial family only (r16): derived city-clustered point
@@ -254,10 +251,8 @@ def main() -> int:
         ):
             runs, rows = [], 0
             for _ in range(2):
-                spark.catalog.clearCache()
-                t0 = time.time()
-                rows = fn(docs).count()
-                runs.append(round(time.time() - t0, 3))
+                sec, rows = timed_run(spark, lambda s, d: fn(docs), path)
+                runs.append(sec)
             res[op] = {"sec": min(runs), "runs": runs, "pairs": rows}
             print(f"# {name} {op}: {runs} pairs={rows}", file=sys.stderr)
         out[name] = res
